@@ -726,7 +726,9 @@ object Relational {
     // SHUFFLED-HASH on the fact-fact join (guide §3, r19): the F-
     // filtered orders side is ~12% of lineitem — too big to broadcast
     // at any real scale, but its per-partition slice builds a hash map
-    // comfortably (and SHJ spills per partition if it ever doesn't) —
+    // comfortably (the build side is held in memory: a skewed or
+    // oversized partition can OOM the task, so this relies on the
+    // scale gate below and AQE's partition sizing) —
     // and the hash build skips BOTH sides' sorts, the SMJ's dominant
     // cost here (sf10 same-JVM A/B, warm passes: SMJ 5.19/4.72 s vs
     // SHJ 3.91/3.67 s on the join+aggregate prefix). The aggregates

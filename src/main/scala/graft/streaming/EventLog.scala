@@ -11,11 +11,15 @@ import org.apache.spark.sql.functions._
   * from committed offsets, and replay-from-earliest
   * (`auto.offset.reset=smallest`).
   *
-  * Scale notes: production is one narrow pass + a per-partition
-  * window for offset assignment; the only driver-side read is the
-  * ≤ numPartitions-row high-water-mark aggregate (metadata, not
-  * data). Consumption is a partition-pruned scan with the offset
-  * predicate pushed to parquet.
+  * Scale notes: every call reads the topic through ONE [[scan]] with
+  * the topic's own schema — no parquet-footer inference job, and one
+  * directory listing per call that all of the call's passes share (so
+  * they also see one file snapshot). Production is one narrow pass +
+  * a per-partition window for offset assignment. Driver-side reads
+  * are ≤ numPartitions-row aggregates (high-water marks; the bounded
+  * poll's per-partition count/min/max) — metadata, not data.
+  * Consumption is a partition-pruned scan with the offset predicate
+  * pushed to parquet.
   */
 final class EventLog(val dir: String, val numPartitions: Int = 8,
                      val compression: String = "snappy") {
@@ -82,13 +86,24 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
   }
 
   /** Committed high-water-mark (max offset) per partition. */
-  def highWaterMarks(spark: SparkSession): Map[Int, Long] = {
-    restoreAfterCrashedSwap()
-    if (!new java.io.File(dir).exists()) Map.empty
-    else spark.read.parquet(dir)
+  def highWaterMarks(spark: SparkSession): Map[Int, Long] =
+    scan(spark)
       .groupBy("partition").agg(max("offset").as("hwm"))
       .collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  /** Consumer lag per partition: high-water mark minus the group's
+    * committed offset, a never-committed partition counting from −1
+    * (so its lag is its message count on an uncompacted log) — the
+    * first number a Kafka operator looks at. Floors at 0:
+    * [[compactByKey]] can drop a partition's newest records from
+    * under a committed position.
+    */
+  def lag(spark: SparkSession, groupId: String): Map[Int, Long] = {
+    val done = committed(groupId)
+    highWaterMarks(spark).map { case (p, hwm) =>
+      p -> math.max(0L, hwm - done.getOrElse(p, -1L))
+    }
   }
 
   /** The topic's message schema (what [[produce]] writes). */
@@ -105,17 +120,30 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
       org.apache.spark.sql.types.StructField("produced_at",
         org.apache.spark.sql.types.TimestampType)))
 
+  /** The whole topic, read with its own [[schema]] so that no
+    * parquet-footer inference job runs. Columns come back as the
+    * parquet read lays them out — data columns, then the `partition`
+    * directory column — and a topic nobody has produced to yet reads
+    * as an empty frame in that same order (a local relation, so
+    * aggregates over it run no job). Every batch read goes through
+    * here, after the crashed-swap heal.
+    */
+  private def scan(spark: SparkSession): DataFrame = {
+    restoreAfterCrashedSwap()
+    if (new java.io.File(dir).exists()) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(
+        schema.filterNot(_.name == "partition") :+ schema("partition")))
+  }
+
   /** Batch consume: all messages with offset > the given committed
     * offset for their partition (absent partition = from earliest,
     * i.e. `auto.offset.reset=smallest`). A topic nobody has produced
     * to yet consumes as empty, like a freshly created Kafka topic.
     */
   def consume(spark: SparkSession, committed: Map[Int, Long] = Map.empty): DataFrame = {
-    restoreAfterCrashedSwap()
-    val base =
-      if (!new java.io.File(dir).exists())
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.parquet(dir)
+    val base = scan(spark)
     if (committed.isEmpty) base
     else {
       val pred = committed.foldLeft(lit(true)) { case (acc, (p, off)) =>
@@ -893,24 +921,36 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * assumed contiguous offsets and stalled forever when
     * [[compactByKey]] left a gap wider than the allocation (the batch
     * filtered to empty, nothing committed, every retry identical).
-    * The commit is the max offset actually taken ([[runPoll]]), so
+    * The commit is that cutoff, an offset actually taken, so
     * positions stay valid across compaction. Repeated polls drain the
     * backlog in bounded steps — a consumer restarted after downtime
     * processes the outage in `maxMessages`-sized batches instead of
-    * one unbounded one. Costs two metadata-sized pre-passes over the
-    * pruned uncommitted tail (sizing aggregate, then per-partition
-    * rank for the cutoffs — ≤ P rows collected each); the final batch
-    * predicate is plain `offset <= cutoff` per partition, which
-    * pushes to the parquet scan.
+    * one unbounded one.
+    *
+    * Cost: the uncommitted tail is built ONCE (one directory listing,
+    * one file snapshot for every pass) and one metadata-sized
+    * aggregate over it — per-partition count, min and max offset,
+    * ≤ P rows collected — sizes the allocation AND fixes the cutoffs:
+    * offsets are unique per partition, so `max − min + 1 == count`
+    * means the tail is dense and the k-th smallest offset is
+    * `min + k − 1`. Only gapped partitions (which only
+    * [[compactByKey]] leaves) run a rank pass, pruned to those
+    * partitions. The handler gets the tail filtered by plain
+    * `offset <= cutoff` per partition (pushed to the parquet scan),
+    * not a cached copy: the cutoffs ARE the new high-water marks and
+    * Σ allocation IS the batch size, so no stats pass follows.
     */
   def poll(spark: SparkSession, groupId: String, maxMessages: Long)
           (handler: DataFrame => Unit): Long = {
     require(maxMessages > 0, s"maxMessages must be positive: $maxMessages")
     val base = committed(groupId)
-    val backlog = consume(spark, base)
-      .groupBy("partition").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1))
+    val tail = consume(spark, base)
+    // (partition, count, min offset, max offset) of the uncommitted tail
+    val ranges = tail.groupBy("partition")
+      .agg(count(lit(1)), min("offset"), max("offset"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
+    val backlog = ranges.map { case (p, n, _, _) => p -> n }
     val total = backlog.map(_._2).sum
     if (total == 0) 0L
     else {
@@ -927,30 +967,41 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
           alloc(p) += 1; left -= 1
         }
       }
+      val (dense, gapped) = ranges.filter { case (p, _, _, _) => alloc(p) > 0 }
+        .partition { case (_, n, lo, hi) => hi - lo + 1 == n }
       // cutoff per partition = its alloc(p)-th smallest uncommitted
-      // offset (row_number over the pruned tail; ≤ P rows collected)
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("partition").orderBy("offset")
-      val rankPred = alloc.filter(_._2 > 0).foldLeft(lit(false)) {
-        case (acc, (p, k)) =>
-          acc || (col("partition") === p && col("_rk") === lit(k))
-      }
-      val cutoffs = consume(spark, base).select("partition", "offset")
-        .withColumn("_rk", row_number().over(wr))
-        .filter(rankPred)
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      // offset: arithmetic on a dense tail, row_number on a gapped one
+      val denseCuts = dense.map { case (p, _, lo, _) => p -> (lo + alloc(p) - 1) }
+      val gappedCuts =
+        if (gapped.isEmpty) Array.empty[(Int, Long)]
+        else {
+          val wr = org.apache.spark.sql.expressions.Window
+            .partitionBy("partition").orderBy("offset")
+          val rankPred = gapped.foldLeft(lit(false)) { case (acc, (p, _, _, _)) =>
+            acc || (col("partition") === p && col("_rk") === lit(alloc(p)))
+          }
+          tail.filter(col("partition").isin(gapped.map(_._1): _*))
+            .select("partition", "offset")
+            .withColumn("_rk", row_number().over(wr))
+            .filter(rankPred)
+            .collect().map(r => r.getInt(0) -> r.getLong(1))
+        }
+      val cutoffs = (denseCuts ++ gappedCuts).toMap
       val pred = cutoffs.foldLeft(lit(false)) {
         case (acc, (p, cut)) =>
           acc || (col("partition") === p && col("offset") <= lit(cut))
       }
-      runPoll(consume(spark, base).filter(pred), groupId, base, handler)
+      handler(tail.filter(pred))
+      commit(groupId, base ++ cutoffs)
+      want
     }
   }
 
-  /** Shared poll tail: one cached scan serves the HWM/count aggregate
-    * and the handler (the batch used to be scanned three times —
-    * offsets, count, handler), commit after the handler returns
-    * (at-least-once).
+  /** Poll tail of the unbounded [[poll]], which learns the batch's
+    * high-water marks and size only by reading it: one cached scan
+    * serves the HWM/count aggregate and the handler, commit after the
+    * handler returns (at-least-once). The bounded [[poll]] does not
+    * use it — its one aggregate already fixes both.
     */
   private def runPoll(batch: DataFrame, groupId: String,
                       base: Map[Int, Long],
@@ -977,15 +1028,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * get sequential reads. Not safe under concurrent writers (same
     * as Kafka log compaction: run it as the owner).
     */
-  def compact(spark: SparkSession): Unit = {
-    restoreAfterCrashedSwap()
-    val tmp = dir + ".compacting"
-    spark.read.parquet(dir)
-      .repartition(numPartitions, col("partition"))
-      .sortWithinPartitions("partition", "offset")
-      .write.mode("overwrite").partitionBy("partition").parquet(tmp)
-    swapInCompacted(tmp)
-  }
+  def compact(spark: SparkSession): Unit = rewrite(spark)(identity)
 
   /** Keyed log compaction — Kafka's compacted-topic semantics
     * (`cleanup.policy=compact`), the durable twin of the
@@ -1005,21 +1048,31 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * same partition-wise rewrite as [[compact]]. Not safe under
     * concurrent writers — run as the owner, like Kafka's log cleaner.
     */
-  def compactByKey(spark: SparkSession): Unit = {
-    restoreAfterCrashedSwap()
-    val tmp = dir + ".compacting"
+  def compactByKey(spark: SparkSession): Unit = rewrite(spark) { log =>
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("offset").desc)
-    spark.read.parquet(dir)
-      .withColumn("_rn", row_number().over(w))
+    log.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
       // tombstone: the key's final record carrying a null payload
       // deletes the key from the compacted log
       .filter(col("payload").isNotNull)
-      .repartition(numPartitions, col("partition"))
-      .sortWithinPartitions("partition", "offset")
-      .write.mode("overwrite").partitionBy("partition").parquet(tmp)
-    swapInCompacted(tmp)
+  }
+
+  /** The partition-wise rewrite both compactions share: `keep` of the
+    * topic, one shuffle on the partition column, offset-sorted within
+    * each file, swapped in for the live log. A never-produced topic
+    * has nothing to rewrite.
+    */
+  private def rewrite(spark: SparkSession)(keep: DataFrame => DataFrame): Unit = {
+    val log = scan(spark)
+    if (new java.io.File(dir).exists()) {
+      val tmp = dir + ".compacting"
+      keep(log)
+        .repartition(numPartitions, col("partition"))
+        .sortWithinPartitions("partition", "offset")
+        .write.mode("overwrite").partitionBy("partition").parquet(tmp)
+      swapInCompacted(tmp)
+    }
   }
 
   /** Atomically-enough swap of a compacted rewrite into the live

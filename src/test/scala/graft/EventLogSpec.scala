@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.EventLog
 import java.nio.file.Files
@@ -416,34 +417,154 @@ class EventLogSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-bounded-gap").toString + "/event-stream"
     val log = new EventLog(dir, numPartitions = 4)
+    def generation(g: Int, keys: Seq[Long]): Unit =
+      log.produce(keys.toDF("id")
+        .select($"id".cast("string").as("key"),
+                concat(lit(s"$g:"), $"id").as("payload")))
+    // Every batch must be each touched partition's k smallest
+    // uncommitted offsets (the rank definition of the cutoff). The
+    // poll derives a dense tail's cutoff arithmetically and ranks only
+    // a gapped one, so the drains below record which kind they took.
+    var denseTaken = false
+    var gappedTaken = false
+    def drain(group: String, maxMessages: Long)(onBatch: DataFrame => Unit): Int = {
+      var polls = 0
+      var n = -1L
+      while (n != 0L) {
+        val tail = log.consume(spark, log.committed(group))
+          .select($"partition", $"offset").as[(Int, Long)].collect()
+          .groupMap(_._1)(_._2).map { case (p, o) => p -> o.sorted.toSeq }
+        var taken = 0L
+        n = log.poll(spark, group, maxMessages) { batch =>
+          batch.select($"partition", $"offset").as[(Int, Long)].collect()
+            .groupMap(_._1)(_._2).foreach { case (p, got) =>
+              val want = tail(p).take(got.length)
+              assert(got.sorted.toSeq == want,
+                s"partition $p: batch is not the ${got.length} smallest uncommitted offsets")
+              if (tail(p).last - tail(p).head + 1 == tail(p).size) denseTaken = true
+              else gappedTaken = true
+              taken += got.length
+            }
+          onBatch(batch)
+        }
+        assert(taken == n, s"poll reported $n messages, handed over $taken")
+        assert(n <= maxMessages, s"poll exceeded the bound: $n")
+        if (n != 0) polls += 1
+        assert(polls <= 10, "bounded poll stalled on an offset gap")
+      }
+      polls
+    }
     // 3 generations of the same 100 keys: compaction keeps only the
     // last generation, so every partition's surviving offsets START
     // ~2/3 of the way up its range — a gap far wider than the poll
     // allocation. The old `committed + k` arithmetic filtered such a
     // batch to empty, committed nothing, and every retry was
     // identical: a permanent silent stall with backlog remaining.
-    (0 until 3).foreach { g =>
-      log.produce(spark.range(0, 100)
-        .select($"id".cast("string").as("key"),
-                concat(lit(s"$g:"), $"id").as("payload")))
-    }
+    (0 until 3).foreach(g => generation(g, 0L until 100L))
     log.compactByKey(spark)
-    var polls = 0
     var seen = Vector.empty[String]
-    var n = -1L
-    while (n != 0L) {
-      n = log.poll(spark, "g-gap", maxMessages = 30) { batch =>
-        seen = seen ++ batch.select($"payload").as[String].collect()
-      }
-      assert(n <= 30, s"poll exceeded the bound: $n")
-      if (n != 0) polls += 1
-      assert(polls <= 10, "bounded poll stalled on an offset gap")
+    val polls = drain("g-gap", maxMessages = 30) { batch =>
+      seen = seen ++ batch.select($"payload").as[String].collect()
     }
     // all 100 surviving records (latest generation), exactly once
     assert(seen.sorted == (0 until 100).map(i => s"2:$i").sorted.toVector,
       s"lost or duplicated messages across gaps: ${seen.size}")
     assert(polls == 4, s"expected ceil(100/30)=4 bounded polls, got $polls")
     assert(log.committed("g-gap") == log.highWaterMarks(spark))
+    assert(denseTaken, "the last generation survives whole: its tail is dense")
+
+    // a 4th generation of every key, then a 5th of the even keys only:
+    // compaction keeps the 4th generation's ODD keys — holes where its
+    // even keys were — followed by the 5th, so every uncommitted tail
+    // is gapped
+    generation(3, 0L until 100L)
+    generation(4, 0L until 100L by 2)
+    log.compactByKey(spark)
+    seen = Vector.empty
+    val polls2 = drain("g-gap", maxMessages = 30) { batch =>
+      seen = seen ++ batch.select($"payload").as[String].collect()
+    }
+    assert(seen.sorted ==
+      (0 until 100).map(i => s"${if (i % 2 == 0) 4 else 3}:$i").sorted.toVector,
+      s"lost or duplicated messages across interior gaps: ${seen.size}")
+    assert(polls2 == 4, s"expected ceil(100/30)=4 bounded polls, got $polls2")
+    assert(log.committed("g-gap") == log.highWaterMarks(spark))
+    assert(gappedTaken, "the interior holes never reached the rank pass")
+  }
+
+  test("bounded poll on a 64-partition dense backlog: ≤ 4 jobs, nothing left pinned") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-bounded-jobs").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 64)
+    log.produce(spark.range(0, 2000)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    val sc = spark.sparkContext
+    val group = "eventlog-bounded-poll-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val pinned = sc.getPersistentRDDs.keySet
+    var batch: DataFrame = null
+    sc.addSparkListener(listener)
+    val n =
+      try {
+        sc.setJobGroup(group, "bounded poll", interruptOnCancel = false)
+        // the handler runs no job of its own: it keeps the frame
+        try log.poll(spark, "g-jobs", maxMessages = 500) { b => batch = b }
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.graft.ListenerBusProbe.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(n == 500)
+    // the directory listing (64 partition dirs are past Spark's
+    // parallel-discovery threshold) and the one count/min/max aggregate
+    assert(jobs.get >= 1 && jobs.get <= 4, s"bounded poll ran ${jobs.get} jobs")
+    assert(sc.getPersistentRDDs.keySet == pinned, "bounded poll left an RDD pinned")
+    // the handed-over batch is exactly the committed prefix of each partition
+    val done = log.committed("g-jobs")
+    val got = batch.select($"partition", $"offset").as[(Int, Long)].collect()
+    assert(got.length == 500)
+    got.groupMap(_._1)(_._2).foreach { case (p, offs) =>
+      assert(offs.sorted.toSeq == (0L to done(p)), s"partition $p: not a prefix")
+    }
+    assert(done.values.map(_ + 1).sum == 500)
+  }
+
+  test("lag: the backlog after a produce, 0 after a full poll") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lag").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    assert(log.lag(spark, "g-lag").isEmpty, "a never-produced topic has no lag")
+    log.produce(spark.range(0, 100)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    val perPartition = log.consume(spark).groupBy($"partition").count()
+      .as[(Int, Long)].collect().toMap
+    // never committed: counts from -1, i.e. the whole partition
+    assert(log.lag(spark, "g-lag") == perPartition)
+    log.poll(spark, "g-lag", maxMessages = 30)(_ => ())
+    assert(log.lag(spark, "g-lag").values.sum == 70)
+    log.poll(spark, "g-lag")(_ => ())
+    assert(log.lag(spark, "g-lag") == perPartition.map { case (p, _) => p -> 0L })
+  }
+
+  test("consume has one column order before and after the first produce") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-columns").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 2)
+    val before = log.consume(spark)
+    assert(before.isEmpty)
+    log.compact(spark) // nothing to rewrite yet: a no-op, not an error
+    log.produce(spark.range(0, 10)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    val after = log.consume(spark)
+    assert(before.columns.toSeq == after.columns.toSeq,
+      s"empty topic ${before.columns.mkString(",")} vs produced ${after.columns.mkString(",")}")
+    assert(before.dtypes.toSeq == after.dtypes.toSeq)
+    assert(after.columns.toSeq == Seq("offset", "key", "payload", "produced_at", "partition"))
   }
 
   test("readStream maxFilesPerTrigger bounds each micro-batch") {
